@@ -56,7 +56,4 @@ object Tables {
 
   /** Final cast back to double so Spark and DuckDB agree on output type. */
   def asDouble(c: Column): Column = c.cast("double")
-
-  /** SQL-side equivalents for oracle strings. */
-  def decSql(expr: String): String = s"CAST($expr AS DECIMAL(18,6))"
 }

@@ -1,11 +1,9 @@
 package graft.engine
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path}
 import java.security.MessageDigest
-import java.util.Base64
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** One user-directory row (ref: AuthTableEntry {username, salt, pass_hash,
@@ -31,10 +29,10 @@ final case class AuthEntry(username: String, salt: Array[Byte],
   *  - `save()` compacts: rewrite the log as one full-row record per user to
   *    a tmp file, fsync, atomic rename — the reference's write-tmp-then-
   *    rename SAV contract.
-  * Records use the same self-validating `\t#` marker format as the KV WAL
-  * (base64 fields can never contain `\t#`, so torn records fail the marker
-  * check instead of replaying wrong bytes); a torn tail is quarantined to a
-  * `.torn` sibling and the log rewritten to the valid prefix.
+  * Records, boot recovery and the compaction rewrite are the KV WAL's
+  * ([[RedoLog]]): self-validating `\t#`-marked records, a torn tail
+  * quarantined to a `.torn` sibling and the log rewritten to the valid
+  * prefix. This class keeps only what REG/DIFF mean and SAV's compaction.
   */
 final class AuthStore(spark: SparkSession, rng: Random = new Random(),
     dataDir: Option[Path] = None) {
@@ -85,61 +83,31 @@ final class AuthStore(spark: SparkSession, rng: Random = new Random(),
   // tmp), then replay.
   dataDir.foreach(Files.createDirectories(_))
   logPath.foreach { p =>
-    Files.deleteIfExists(p.resolveSibling(p.getFileName.toString + ".tmp"))
-    if (Files.exists(p)) {
-      val lines = Files.readAllLines(p).asScala
-      val valid = lines.takeWhile(l => scala.util.Try(replayLine(l)).isSuccess)
-      if (valid.size < lines.size) {
-        System.err.println(s"[authstore] log torn at record ${valid.size + 1};" +
-          s" quarantining ${lines.size - valid.size} tail record(s)")
-        val torn = p.resolveSibling(p.getFileName.toString + ".torn")
-        Files.writeString(torn, lines.drop(valid.size).map(_ + "\n").mkString,
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND,
-          StandardOpenOption.SYNC)
-        // rewrite via tmp + atomic rename (same as the KV WAL repair): an
-        // in-place truncate-and-rewrite would destroy the acknowledged
-        // valid prefix if the crash repeats mid-rewrite
-        val repaired = p.resolveSibling(p.getFileName.toString + ".repair")
-        Files.writeString(repaired, valid.map(_ + "\n").mkString,
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-          StandardOpenOption.SYNC)
-        Files.move(repaired, p, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
+    Files.deleteIfExists(RedoLog.sibling(p, ".tmp"))
+    RedoLog.recover(p, None, "[authstore] log")(replay)
   }
 
-  /** Replay one record; throws on any structural damage (caller treats the
-    * record and everything after it as torn). */
-  private def replayLine(line: String): Unit = {
-    require(line.endsWith("\t#"), "unterminated auth record")
-    val parts = line.dropRight(2).split("\t", -1)
-    val dec = Base64.getDecoder
-    def s(i: Int) = new String(dec.decode(parts(i)), "UTF-8")
-    parts(0) match {
-      case "REG" => // full row: user, salt, passHash, content (AUTHAUTH analog)
-        require(parts.length == 5, "malformed REG record")
-        users.update(s(1), AuthEntry(s(1), dec.decode(parts(2)),
-          dec.decode(parts(3)), dec.decode(parts(4))))
-      case "DIFF" => // profile update (AUTHDIFF analog)
-        require(parts.length == 3, "malformed DIFF record")
-        val u = s(1)
-        require(users.contains(u), "DIFF for unknown user")
-        users.update(u, users(u).copy(content = dec.decode(parts(2))))
-      case other => throw new IllegalArgumentException(s"unknown op $other")
-    }
+  /** Replay one record; throws on any structural damage (the caller treats
+    * the record and everything after it as torn). */
+  private def replay(r: RedoLog.Record): Unit = r.op match {
+    case "REG" => // full row: user, salt, passHash, content (AUTHAUTH analog)
+      require(r.fields.size == 4, "malformed REG record")
+      users.update(r.text(0),
+        AuthEntry(r.text(0), r.fields(1), r.fields(2), r.fields(3)))
+    case "DIFF" => // profile update (AUTHDIFF analog)
+      require(r.fields.size == 2, "malformed DIFF record")
+      val u = r.text(0)
+      require(users.contains(u), "DIFF for unknown user")
+      users.update(u, users(u).copy(content = r.fields(1)))
+    case other => throw new IllegalArgumentException(s"unknown op $other")
   }
 
-  private def fullRowRecord(e: AuthEntry): String = {
-    val enc = Base64.getEncoder
-    Seq("REG", enc.encodeToString(e.username.getBytes("UTF-8")),
-      enc.encodeToString(e.salt), enc.encodeToString(e.passHash),
-      enc.encodeToString(e.content)).mkString("\t") + "\t#\n"
-  }
+  private def fullRowRecord(e: AuthEntry): String =
+    RedoLog.encode("REG", e.username.getBytes("UTF-8"), e.salt, e.passHash,
+      e.content)
 
   private def logAppend(record: String): Unit =
-    logPath.foreach(Files.writeString(_, record, StandardOpenOption.CREATE,
-      StandardOpenOption.APPEND, StandardOpenOption.SYNC))
+    logPath.foreach(RedoLog.append(_, record))
 
   private val digest = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("SHA-256"))
@@ -194,9 +162,7 @@ final class AuthStore(spark: SparkSession, rng: Random = new Random(),
       else if (content.length > LEN_PROFILE_FILE) Result(false, ERR_REQ_FMT)
       else {
         users.update(user, users(user).copy(content = content))
-        logAppend("DIFF\t" +
-          Base64.getEncoder.encodeToString(user.getBytes("UTF-8")) + "\t" +
-          Base64.getEncoder.encodeToString(content) + "\t#\n")
+        logAppend(RedoLog.encode("DIFF", user.getBytes("UTF-8"), content))
         Result(true, OK)
       }
     }
@@ -228,14 +194,8 @@ final class AuthStore(spark: SparkSession, rng: Random = new Random(),
   /** SAV: compact the log to one full-row record per user — write tmp,
     * fsync, atomic rename (ref: p3/server/my_storage.cc:505-565). */
   def save(): Unit = synchronized {
-    logPath.foreach { p =>
-      val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-      Files.writeString(tmp, users.values.map(fullRowRecord).mkString,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.SYNC)
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    logPath.foreach(
+      RedoLog.rewrite(_, ".tmp", users.values.map(fullRowRecord).mkString))
   }
 
   /** Typed projection for analytics (SURVEY §1.4). */

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions.udaf
   * multi-aggregate plans, under variable per-group quotas as in
   * temperature_mix). That is the partial-combine property that makes
   * count/sum scale, applied to ranking (an ObjectHashAggregate with a
-  * [[graft.engine.MrAggregator]]-style typed buffer; ref precedent:
-  * the associative KMR tier, SURVEY §7.3).
+  * typed buffer; ref precedent: the associative KMR path,
+  * `MapReduce.runTree`, SURVEY §7.3).
   *
   * Ordering contract: descending by value, ties broken ASCENDING by id —
   * a total order, so the result is partitioning-independent and the

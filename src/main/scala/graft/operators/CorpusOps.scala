@@ -509,11 +509,6 @@ object CorpusOps {
           "element_at(ws, i-2) as w1, element_at(ws, i-1) as w2, " +
           "element_at(ws, i) as w3))")).as("g"))
       .select(col("doc_id"), col("g.w1"), col("g.w2"), col("g.w3"))
-    def bis(src: DataFrame): DataFrame = src.filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(2, size(ws)), i -> struct(" +
-          "element_at(ws, i-1) as w1, element_at(ws, i) as w2))")).as("g"))
-      .select(col("doc_id"), col("g.w1"), col("g.w2"))
     // ALL THREE model tables from ONE explode + ONE aggregate + ONE
     // materialization (levels tagged by w2/w3 nullness), instead of the
     // r17 three train-slice scans + three shuffles + three shared

@@ -3204,17 +3204,13 @@ object Dedup {
       .withColumn("ap", col("ai")).withColumn("bp", col("bi"))
     // base-16 LCP digits: at level k (width 16^k) up to FIFTEEN advances
     // can land before the digit is exhausted (a 16th would contradict
-    // the level-(k+1) non-match above it). ONE join per level: the pair
-    // row explodes into its two (side, doc, cursor) probes, the level
-    // frame streams through a single build-side-first right_outer (AQE
-    // broadcasts the small gated PAIR side — the level frame is never
-    // exchanged OR broadcast), and a max-when regroup keyed on the pair
-    // folds both sides back — the r18 explode-symmetrization discipline
-    // applied to the descend's per-side lookups, halving the
-    // corpus-sized level-frame scans per level (two right_outer joins
-    // before); the added regroup exchange carries only the gated pair
-    // subset. The kept levels carry their own +j·w lead ranks, so the
-    // fifteen sub-steps stay row-local conditionals. Level K−1 runs
+    // the level-(k+1) non-match above it). Below the top level, each
+    // level runs TWO per-side lookups: the level frame is right_outer
+    // joined onto the pair rows once on side a's (doc, cursor) = (ad, ap)
+    // and once on side b's (bd, bp). right_outer keeps every pair row; a
+    // cursor with no level row gets null ranks, which never advance. The
+    // kept levels carry their own +j·w lead ranks, so the fifteen
+    // sub-steps stay row-local conditionals. Level K−1 runs
     // WITHOUT a probe join: its per-side ranks rode in on the adjacency
     // join (cursors are still at ai/bi there). Those carried ranks use
     // pairedFrame's −1 past-end sentinel instead of null; a −1 === −1

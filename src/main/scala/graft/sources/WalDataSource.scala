@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util
-import java.util.Base64
+import graft.engine.RedoLog
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -270,28 +270,22 @@ final class WalWriterFactory(dir: String) extends DataWriterFactory {
     new WalDataWriter(dir, partitionId, taskId)
 }
 
-/** Task-scope segment writer: records stream to a hidden temp file named
-  * by (partition, task attempt, uuid) — unique per ATTEMPT, so retries
-  * never collide — and task commit merely reports the temp path; the
-  * rename that publishes it is the driver's. */
+/** Task-scope segment writer: [[RedoLog]] records stream to a hidden temp
+  * file named by (partition, task attempt, uuid) — unique per ATTEMPT, so
+  * retries never collide — and task commit merely reports the temp path;
+  * the rename that publishes it is the driver's. */
 final class WalDataWriter(dir: String, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
   private val tmp = java.nio.file.Paths.get(dir,
     f".part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.tmp")
   private val out = java.nio.file.Files.newBufferedWriter(tmp)
-  private val enc = Base64.getEncoder
 
   override def write(row: InternalRow): Unit = {
     // field 0 is `seq` — storage-positional, ignored on write (see
     // WalWriteBuilder.build)
-    val op = row.getUTF8String(1).toString
-    require(!op.contains("\t") && !op.contains("\n"),
-      s"graft-wal sink: op must not contain separators: $op")
-    val key = enc.encodeToString(row.getUTF8String(2).getBytes)
-    val sb = new StringBuilder(op).append('\t').append(key)
-    if (!row.isNullAt(3))
-      sb.append('\t').append(enc.encodeToString(row.getBinary(3)))
-    out.write(sb.append("\t#\n").toString)
+    val key = row.getUTF8String(2).getBytes
+    val fields = if (row.isNullAt(3)) Seq(key) else Seq(key, row.getBinary(3))
+    out.write(RedoLog.encode(row.getUTF8String(1).toString, fields: _*))
   }
 
   override def commit(): WriterCommitMessage = {
@@ -473,12 +467,13 @@ final class WalReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** Streams one WAL segment line-by-line (no whole-file materialization).
-  * Records missing the terminal `\t#` marker, with a wrong field count, or
-  * with undecodable base64 are skipped — the same quarantine-not-crash
-  * defense as engine replay, so one damaged record never kills the whole
-  * scan. (Legacy marker-less logs are migrated to marker format by the
-  * engine's first boot; read them through the engine, not this raw reader.) */
+/** Streams one WAL segment line-by-line (no whole-file materialization),
+  * decoding with the engine's own codec, [[RedoLog]]. Records
+  * missing the terminal `\t#` marker, with a wrong field count, or with
+  * undecodable base64 are skipped — the same quarantine-not-crash defense
+  * as engine replay, so one damaged record never kills the whole scan.
+  * (Legacy marker-less logs are migrated to marker format by the engine's
+  * first boot; read them through the engine, not this raw reader.) */
 final class WalPartitionReader(path: String, seqBase: Long = 0L)
     extends PartitionReader[InternalRow] {
   private val reader =
@@ -505,19 +500,12 @@ final class WalPartitionReader(path: String, seqBase: Long = 0L)
   /** Full structural validation happens HERE, not in get(): a marker-
     * terminated but malformed record ('X\t#', non-base64 fields) must be
     * skipped like a torn one, not crash the scan at get() time. Records are
-    * `OP\tb64(key)[\tb64(value)]\t#` (see KvStore.replayLine). */
-  private def parse(line: String): Option[InternalRow] = {
-    if (!line.endsWith("\t#")) return None
-    val parts = line.dropRight(2).split("\t", -1)
-    if (parts.length < 2 || parts.length > 3) return None
-    scala.util.Try {
-      val dec = Base64.getDecoder
-      val key = dec.decode(parts(1))
-      val value = if (parts.length > 2) dec.decode(parts(2)) else null
-      InternalRow(seq, UTF8String.fromString(parts(0)),
-        UTF8String.fromBytes(key), value)
-    }.toOption
-  }
+    * `OP\tb64(key)[\tb64(value)]\t#`. */
+  private def parse(line: String): Option[InternalRow] =
+    scala.util.Try(RedoLog.decode(line, marked = true)).toOption
+      .filter(r => r.fields.size == 1 || r.fields.size == 2)
+      .map(r => InternalRow(seq, UTF8String.fromString(r.op),
+        UTF8String.fromBytes(r.fields(0)), r.fields.lift(1).orNull))
 
   override def get(): InternalRow = row
 

@@ -3,6 +3,7 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import java.io.ByteArrayOutputStream
+import java.nio.file.Files
 import java.util.jar.{JarEntry, JarOutputStream}
 import scala.jdk.CollectionConverters._
 
@@ -147,21 +148,63 @@ class EngineMapReduceSpec extends AnyFunSuite with SparkSpec {
     assert(s(f.combine(f.zero, x)) == s(x) && s(f.combine(x, f.zero)) == s(x))
   }
 
-  test("MrAggregator: Catalyst-aggregate execution is deterministic (sorted merge combine)") {
-    val e = mkEngine()
-    val r = MrAggregator.run(e.kv.view, BuiltinFuncs.AllKeysAssoc)
-    assert(r.succeeded)
-    assert(r.dataUtf8.split("\n").toSeq == (1 to 8).map(i => s"k$i"))
-    // empty table: the aggregation yields the reducer's zero
-    val empty = new Engine(spark, EngineOptions())
-    val r0 = MrAggregator.run(empty.kv.view, BuiltinFuncs.AllKeysAssoc)
-    assert(r0.succeeded && r0.data.isEmpty)
-  }
-
-  test("treeReduce on empty table returns zero, not a crash") {
+  test("tree path on an empty table answers ERR_NO_DATA, not zero") {
     val empty = new Engine(spark, EngineOptions())
     val r = MapReduce.runTree(empty.kv.view, BuiltinFuncs.AllKeysAssoc)
-    assert(r.succeeded && r.data.isEmpty)
+    assert(!r.succeeded && r.msg == ERR_NO_DATA)
+  }
+
+  test("KMR of an associative function on an empty store → ERR_NO_DATA") {
+    val empty = new Engine(spark, EngineOptions(admin = "alice"))
+    empty.register("alice", "pw")
+    empty.registerBuiltin("alice", "pw", "assoc", BuiltinFuncs.AllKeysAssoc)
+    assert(empty.invokeMr("alice", "pw", "assoc").msg == ERR_NO_DATA)
+  }
+
+  test("KMR → ERR_NO_DATA when every snapshot key is tombstoned in the delta") {
+    // the snapshot still holds k1..k8; the view's anti-join drops them all
+    val dir = Files.createTempDirectory("graft-mr-tomb-")
+    val e = new Engine(spark, EngineOptions(admin = "alice", dataDir = Some(dir)))
+    e.register("alice", "pw")
+    (1 to 8).foreach(i => e.kv.insert(s"k$i", s"$i".getBytes))
+    assert(e.save("alice", "pw").succeeded)
+    (1 to 8).foreach(i => assert(e.kv.remove(s"k$i")))
+    e.registerBuiltin("alice", "pw", "all_keys", BuiltinFuncs.AllKeys)
+    e.registerBuiltin("alice", "pw", "assoc", BuiltinFuncs.AllKeysAssoc)
+    e.registerBuiltin("alice", "pw", "invalid2", BuiltinFuncs.FailingReduce)
+    assert(e.invokeMr("alice", "pw", "all_keys").msg == ERR_NO_DATA)
+    assert(e.invokeMr("alice", "pw", "assoc").msg == ERR_NO_DATA)
+    // ERR_NO_DATA outranks ERR_SERVER: reduce never runs on an empty table
+    assert(e.invokeMr("alice", "pw", "invalid2").msg == ERR_NO_DATA)
+    // one live key again: both paths answer it
+    e.kv.insert("k5", "5".getBytes)
+    assert(e.invokeMr("alice", "pw", "all_keys").dataUtf8 == "k5")
+    assert(e.invokeMr("alice", "pw", "assoc").dataUtf8 == "k5")
+  }
+
+  test("redo-log golden bytes: PUT, DEL, REG and DIFF records") {
+    def b(s: String) = s.getBytes("UTF-8")
+    assert(RedoLog.encode("PUT", b("k1"), b("v1")) == "PUT\tazE=\tdjE=\t#\n")
+    assert(RedoLog.encode("DEL", b("k1")) == "DEL\tazE=\t#\n")
+    val dir = Files.createTempDirectory("graft-golden-")
+    val kv = new KvStore(spark, Some(dir))
+    kv.upsert("k1", b("v1"))
+    kv.remove("k1")
+    assert(Files.readString(dir.resolve("kv_wal.jsonl")) ==
+      "#graft-wal-v2\nPUT\tazE=\tdjE=\t#\nDEL\tazE=\t#\n")
+    // REG carries user, salt, SHA-256(pass ‖ salt) and the empty profile
+    val auth = new AuthStore(spark, new scala.util.Random(7), Some(dir))
+    assert(auth.addUser("ann", "pw").succeeded)
+    assert(auth.setUserData("ann", "pw", b("p1")).succeeded)
+    val salt = new Array[Byte](16)
+    new scala.util.Random(7).nextBytes(salt)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(b("pw")); md.update(salt)
+    val enc = java.util.Base64.getEncoder
+    assert(Files.readString(dir.resolve("auth_log.jsonl")) ==
+      s"REG\tYW5u\t${enc.encodeToString(salt)}\t" +
+        s"${enc.encodeToString(md.digest())}\t\t#\n" +
+        "DIFF\tYW5u\tcDE=\t#\n")
   }
 
   test("engine routes associative fns to the tree tier (combines run on executor task threads)") {

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scope registry of persisted intermediates with OWNED release.
@@ -85,12 +85,29 @@ object SharedFrames {
     p
   }
 
-  /** Register a loop-owned RDD whose FINAL generation outlives its loop:
-    * the iterative operators (connected components, BPE training)
-    * unpersist superseded rounds inline, but the last round feeds the
-    * returned frame and can only be freed after the consuming action. */
-  def sharedRdd(rdd: RDD[_]): Unit =
-    live.add(() => { rdd.unpersist(blocking = false); () })
+  /** Persist `rdd` (MEMORY_AND_DISK unless told otherwise) and register
+    * it for release in the same step, before any action runs on it. A
+    * loop may still `unpersist` a superseded generation inline; the
+    * registry's later unpersist of it is a no-op. */
+  def ownedRdd[T](rdd: RDD[T],
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): RDD[T] = {
+    val p = rdd.persist(level)
+    live.add(() => { p.unpersist(blocking = false); () })
+    p
+  }
+
+  /** The lineage cut of driver-controlled iteration: `df`'s rows go into
+    * an [[ownedRdd]] and come back as a frame whose logical plan reads
+    * those rows, not the history that produced them (without the cut,
+    * each round's plan re-derives every prior round). The blocks fill in
+    * the first action that reads them (with AQE on, building the RDD
+    * already runs the plan's shuffle stages). The RDD is handed back so
+    * a loop can free superseded rounds early; whatever it leaves
+    * persisted goes at [[releaseAll]], even if an action on it threw. */
+  def materialize(df: DataFrame): (DataFrame, RDD[Row]) = {
+    val rdd = ownedRdd(df.rdd)
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  }
 
   /** Free every registered intermediate. Idempotent and thread-safe; call
     * after a query's terminal action (between bench runs, after each

@@ -140,7 +140,7 @@ object SparkEntry {
     "bpe_vocab_256" -> (graft.operators.CorpusOps.bpeVocabLarge _),
     // the production-depth variant: top-k SYMBOL-DISJOINT merges per
     // round (a DIFFERENT documented election rule, not an approximation
-    // — see bpeTrainBatched scaladoc), rows-only for the same unrolled-
+    // — see CorpusOps.bpeTrain scaladoc), rows-only for the same unrolled-
     // SQL reason; exactness spec-pinned by a full driver replay of the
     // batched rule
     "bpe_vocab_256_batched" ->
@@ -380,7 +380,8 @@ object SparkEntry {
     // deterministic synchronous label-propagation communities: per round
     // one equi-join + partial-combinable (count, min-label) vote packing
     "graph_labelprop" -> (graft.operators.GraphRank.graphLabelprop _),
-    "dedup_clusters_star" -> (Dedup.dedupClustersStar _),
+    // the star-contraction name, kept: the same engine as dedup_clusters
+    "dedup_clusters_star" -> (Dedup.dedupClusters _),
     "dedup_clusters_star_dist" -> (Dedup.dedupClustersStarDistributed _),
     "decontaminate" -> (Dedup.decontaminate _),
     // the EVAL-side audit: per-eval-doc leaked grams / leak fraction /

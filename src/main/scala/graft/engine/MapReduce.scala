@@ -44,18 +44,42 @@ object MapReduce {
   }
 
   /** Executor-side tree reduction for associative reducers — no driver
-    * gather of per-row outputs: `combine` runs as partial aggregation per
-    * partition, then over a logarithmic tree (`treeAggregate`). The
-    * aggregate is None until a row arrives, so an empty table is told apart
-    * from one whose rows combine to `zero`. */
+    * gather of per-row outputs: each partition combines its own map
+    * outputs as a balanced binary tree ([[balanced]]), then the partition
+    * results meet in a logarithmic tree (`treeAggregate`), all in one
+    * job. The aggregate is None until a row arrives, so an empty table is
+    * told apart from one whose rows combine to `zero`. */
   private[engine] def runTree(kv: Dataset[KV],
       fn: AssociativeMapReduceFn): Result = answer {
     def merge(a: Option[Array[Byte]], b: Option[Array[Byte]]) = (a, b) match {
       case (Some(x), Some(y)) => Some(fn.combine(x, y))
       case _ => a.orElse(b)
     }
-    kv.rdd.treeAggregate(Option.empty[Array[Byte]])(
-      (acc, r) => merge(acc, Some(fn.map(r.key, r.value))), merge)
+    kv.rdd
+      .mapPartitions(it =>
+        Iterator.single(balanced(it.map(r => fn.map(r.key, r.value)), fn)))
+      .treeAggregate(Option.empty[Array[Byte]])(merge, merge)
+  }
+
+  /** Combine `outs` in order as a balanced tree: a binary-counter stack
+    * whose slot i holds the combine of 2^i consecutive outputs, merged
+    * whenever two slots reach the same size. Each output takes part in
+    * O(log n) combines, so a `combine` that costs its input size does
+    * O(n log n) work in all, where folding one output at a time into a
+    * growing accumulator does O(n²). */
+  private def balanced(outs: Iterator[Array[Byte]],
+      fn: AssociativeMapReduceFn): Option[Array[Byte]] = {
+    val stack = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
+    outs.foreach { x =>
+      var level = 0
+      var acc = x
+      while (stack.nonEmpty && stack.last._1 == level) {
+        acc = fn.combine(stack.remove(stack.length - 1)._2, acc)
+        level += 1
+      }
+      stack += ((level, acc))
+    }
+    stack.map(_._2).reduceRightOption(fn.combine)
   }
 
   private def answer(reduced: => Option[Array[Byte]]): Result =

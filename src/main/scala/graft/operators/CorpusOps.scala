@@ -1169,12 +1169,11 @@ object CorpusOps {
     * table (the classic BPE-training reduction — merges never rescan the
     * corpus); each of the [[BpeMerges]] rounds is then a pair-count
     * hash-aggregate over the VOCAB-sized table plus a one-row driver fetch
-    * of the argmax (driver-controlled iteration, the [[Dedup.dedupClusters]]
-    * pattern) and a narrow replace projection. The vocab table is
-    * materialized once; rounds stack ≤ [[BpeMerges]] narrow projections on
-    * top of its in-memory blocks. */
+    * of the argmax (driver-controlled iteration, see [[bpeTrain]]) and a
+    * narrow replace map. The vocab table is materialized once; each round
+    * reads the previous generation's in-memory blocks. */
   def bpeVocab(spark: SparkSession, dir: String): DataFrame = {
-    val (merges, _) = bpeTrain(spark, dir)
+    val (merges, _) = bpeTrain(spark, dir, BpeMerges, 1)
     import spark.implicits._
     merges.toDF("merge_rank", "pair", "merged", "pair_count")
       .orderBy(col("merge_rank"))
@@ -1188,7 +1187,7 @@ object CorpusOps {
     * production multi-million-word vocab spreads across
     * ⌈words / 2^18⌉ partitions and the two-level reduceByKey election
     * engages (per-partition pair maps → map-side-combined shuffle →
-    * per-partition argmax — never a driver-side merge of vocab-sized
+    * per-partition top-k — never a driver-side merge of vocab-sized
     * maps). Both election paths implement the identical rule and a spec
     * pins them merge-for-merge equal on the same corpus. The ONE
     * corpus-sized aggregate that builds the table keeps the session's
@@ -1218,21 +1217,6 @@ object CorpusOps {
     m
   }
 
-  /** Streaming argmax under the election rule: max count, ties to the
-    * UTF-8-binary-least pair — the same comparison on every level
-    * (partition, shuffle reducer, driver). */
-  private def argmaxPair(
-      it: Iterator[(String, Long)]): Iterator[(String, Long)] = {
-    var bp: String = null
-    var bc = 0L
-    it.foreach { case (p, c) =>
-      if (bp == null || c > bc || (c == bc && utf8Less(p, bp))) {
-        bp = p; bc = c
-      }
-    }
-    if (bp == null) Iterator.empty else Iterator.single((bp, bc))
-  }
-
   /** UTF-8 byte-order comparison — the binary collation BOTH engines sort
     * `pair` with (Spark UTF8String, DuckDB blob collation), used for the
     * election tie-break so driver and executors agree with the oracle on
@@ -1242,106 +1226,6 @@ object CorpusOps {
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
-  /** The shared training fold behind [[bpeVocab]], [[bpeVocabLarge]] and
-    * [[bpeEncode]]: runs `rounds` election/merge rounds and returns BOTH
-    * products — the driver-held merge table, and the final
-    * word→representation frame (each word of the vocab with its
-    * fully-merged symbol string; every symbol is one char, so
-    * `length(repr)` IS the encoded token count).
-    *
-    * The rounds are driver-controlled iteration over the VOCAB-sized
-    * word-frequency table, so they run on the table's persisted RDD
-    * directly — per round ONE job with no per-round Catalyst
-    * analysis/codegen. The round-6 formulation re-planned a
-    * stacked-projection DataFrame every round: ~24 ms of fixed
-    * scheduling+planning per round — 6.1 s at 256 merges, extrapolating
-    * to ~20 min of pure overhead at a production 50k-merge vocab. The
-    * table's partitioning derives from vocab size
-    * ([[bpeVocabPartitionsFor]]): below [[BpeWordsPerPartition]] words
-    * the whole vocab is one partition and each election is a
-    * single-stage, single-task, shuffle-free job (~3 ms); above, the
-    * two-level reduceByKey election spreads (per-partition maps →
-    * map-side-combined shuffle → per-partition argmax, ≤ partitions
-    * candidate rows to the driver). Each generation is persisted eagerly
-    * and its predecessor freed as soon as the next election job has
-    * materialized it (residency ≤ 2 generations — the
-    * [[Dedup.dedupClusters]] loop discipline). Election semantics are
-    * IDENTICAL to the DataFrame formulation AND across both paths
-    * (spec-pinned merge-for-merge): overlapping pair counts weighted by
-    * word frequency (code-point windows, exactly Spark's `substring`
-    * semantics), max count, ties to the lexicographically least pair
-    * under binary collation, left-to-right non-overlapping replace. The
-    * one corpus-sized aggregate still runs as a full-width DataFrame
-    * plan. */
-  private[operators] def bpeTrain(spark: SparkSession, dir: String,
-      rounds: Int = BpeMerges, partitionsOverride: Int = 0)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val agg = t(spark, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .as[(String, Long)]
-      .rdd.map { case (w, c) => (w, w, c) } // (word, repr, cnt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the sizing count doubles as the materialization job the loop needed
-    // anyway; the full-width layer is dropped once the narrow table holds
-    val p = if (partitionsOverride > 0) partitionsOverride
-            else bpeVocabPartitionsFor(agg.count())
-    val base = agg.coalesce(p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
-    agg.unpersist(blocking = false)
-    var cur = base
-    var prev: org.apache.spark.rdd.RDD[(String, String, Long)] = null
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var dry = false
-    for (r <- 1 to rounds if !dry) {
-      val candidates =
-        if (p == 1)
-          // whole vocab in one task: count + argmax inline, no shuffle
-          cur.mapPartitions { it =>
-            argmaxPair(pairCounts(it).entrySet().iterator().asScala
-              .map(e => (e.getKey, e.getValue)))
-          }.collect()
-        else
-          cur.mapPartitions { it =>
-            pairCounts(it).entrySet().iterator().asScala
-              .map(e => (e.getKey, e.getValue))
-          }.reduceByKey(_ + _, p)
-            .mapPartitions(argmaxPair)
-            .collect()
-      // the election materialized `cur` — its predecessor is now free
-      if (prev != null) { prev.unpersist(blocking = false); prev = null }
-      if (candidates.isEmpty) {
-        // vocabulary ran dry (every repr is a single symbol) — no pair to
-        // elect this round or ever again (the table is unchanged from here
-        // on). The oracle agrees by construction: its b$r CTE is empty, so
-        // the round contributes no merge row and its replace() coalesces
-        // to a no-op '' pattern.
-        dry = true
-      } else {
-        val (bp, bc) = candidates.reduce { (x, y) =>
-          if (x._2 > y._2 || (x._2 == y._2 && utf8Less(x._1, y._1))) x else y
-        }
-        val m = (BpeMergeCharBase + r).toChar.toString
-        merges += ((r, bp, m, bc))
-        val next = cur
-          .map { case (w, repr, cnt) => (w, repr.replace(bp, m), cnt) }
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        prev = cur
-        cur = next
-      }
-    }
-    // the final (and its feeding) generation outlive the loop — the
-    // harness frees them after the consuming action
-    graft.SharedFrames.sharedRdd(cur)
-    if (prev != null) graft.SharedFrames.sharedRdd(prev)
-    (merges.result(),
-      cur.map { case (w, repr, _) => (w, repr) }.toDF("word", "repr"))
-  }
-
   /** Merge count for [[bpeVocabLarge]] — past the point where the
     * unrolled-SQL oracle stays tractable (256 CTE rounds), so the query
     * registers rows-only; exactness at this depth is pinned by a spec
@@ -1350,13 +1234,13 @@ object CorpusOps {
   final val BpeMergesLarge = 256
 
   /** BPE training at a realistic merge count ([[BpeMergesLarge]]): the
-    * same driver-controlled loop as [[bpeVocab]] — proving the design
+    * same [[bpeTrain]] loop at k = 1 as [[bpeVocab]] — proving the design
     * (one corpus aggregate, one bounded vocab-table job per round,
     * generation-at-a-time residency) holds past the toy merge count. May
     * return fewer rows than requested on a corpus whose vocabulary runs
     * dry. */
   def bpeVocabLarge(spark: SparkSession, dir: String): DataFrame = {
-    val (merges, _) = bpeTrain(spark, dir, rounds = BpeMergesLarge)
+    val (merges, _) = bpeTrain(spark, dir, BpeMergesLarge, 1)
     import spark.implicits._
     merges.toDF("merge_rank", "pair", "merged", "pair_count")
       .orderBy(col("merge_rank"))
@@ -1366,47 +1250,68 @@ object CorpusOps {
     * elected per distributed round. */
   final val BpeBatchK = 16
 
-  /** BATCHED BPE training — the documented 50k-vocab variant. Canonical
-    * BPE elects ONE pair per round, so training cost is rounds × job
-    * latency: even at the sequential loop's ~3 ms/round, a production
-    * 50k-merge vocab spends ~2.5 min on round-trips alone. The standard
-    * mitigation (SentencePiece/YouTokenToMe lineage) elects the top-k
-    * pairs per round, restricted to SYMBOL-DISJOINT pairs so the k
-    * replaces cannot interact (a pair sharing a symbol with an
-    * already-accepted pair would see different counts after that merge
-    * applies — disjointness makes the batch order-independent, though
-    * ranks are still assigned, and replaces applied, in acceptance
-    * order). Merge TABLES therefore differ from canonical sequential BPE
-    * where a round's acceptances would have changed later counts — this
-    * is a DIFFERENT, documented election rule, not an approximation of
-    * the sequential one, which is why the query registers alongside
-    * `bpe_vocab_256` instead of replacing it. Election rule per round:
-    * rank global pair counts by (count desc, pair UTF-8-binary asc),
-    * greedily accept symbol-disjoint pairs up to k; apply all accepted
-    * replaces in one map pass. Rounds shrink ~k-fold; the per-round job
-    * is the same one-job election as the sequential loop (per-partition
-    * top-k after the global reduce, so ≤ k·partitions candidate rows
-    * reach the driver). Exactness is pinned by a FULL driver replay of
-    * the identical batched rule in spec (the `bpe_vocab_256` discipline;
-    * a 256-round unrolled SQL oracle is equally intractable here, so the
-    * query registers rows-only). */
-  private[operators] def bpeTrainBatched(spark: SparkSession, dir: String,
-      merges: Int = BpeMergesLarge, k: Int = BpeBatchK,
-      partitionsOverride: Int = 0)
+  /** The one BPE trainer behind every BPE query: election/merge rounds
+    * over the word-frequency table until `merges` merges are ranked or the
+    * vocabulary runs dry. Returns BOTH products — the driver-held merge
+    * table (rank, pair, fresh merged symbol, pair count), and the final
+    * word→representation frame (each word of the vocab with its merged
+    * symbol string; every symbol is one char, so `length(repr)` IS the
+    * encoded token count).
+    *
+    * Election rule per round: rank global pair counts (overlapping
+    * code-point windows weighted by word frequency — exactly Spark's
+    * `substring` semantics) by (count desc, pair UTF-8-binary asc), and
+    * greedily accept up to `k` SYMBOL-DISJOINT pairs; apply the accepted
+    * replaces (left-to-right, non-overlapping) in acceptance order in one
+    * map pass. With k = 1 this is canonical sequential BPE — one
+    * most-frequent pair per round (`bpe_vocab`, `bpe_vocab_256`,
+    * `bpe_encode`, `bpe_roundtrip`). With k = [[BpeBatchK]] it is the
+    * batched 50k-vocab variant (the `_batched` queries): canonical BPE
+    * costs rounds × job latency — ~2.5 min of round-trips alone for a
+    * production 50k-merge vocab even at ~3 ms/round — so the
+    * SentencePiece/YouTokenToMe lineage elects the top-k pairs per round,
+    * restricted to disjoint symbols so the k replaces cannot interact (a
+    * pair sharing a symbol with an already-accepted pair would see
+    * different counts after that merge applies). Its merge TABLES differ
+    * from sequential BPE wherever a round's acceptances would have
+    * changed later counts: a different, documented election rule, not an
+    * approximation, which is why it registers alongside `bpe_vocab_256`
+    * instead of replacing it.
+    *
+    * The rounds are driver-controlled iteration over the VOCAB-sized
+    * table, so they run on its persisted RDD directly — per round ONE job
+    * with no per-round Catalyst analysis/codegen (re-planning a stacked
+    * DataFrame cost ~24 ms per round, ~20 min at 50k merges). The table's
+    * partitioning derives from vocab size ([[bpeVocabPartitionsFor]]):
+    * below [[BpeWordsPerPartition]] words each election is a
+    * single-stage, single-task, shuffle-free job; above, per-partition
+    * pair maps → map-side-combined reduceByKey → per-partition top-k, so
+    * ≤ k·partitions candidate rows reach the driver. The driver truncates
+    * the candidates to the global top-k before the greedy scan — the union
+    * of per-partition top-ks always contains it — so the accepted set is a
+    * pure function of the counts under any partitioning (spec-pinned).
+    * Each generation is an [[graft.SharedFrames.ownedRdd]], freed inline
+    * once the next election has materialized its successor (residency ≤ 2
+    * generations). Exactness: `bpe_vocab`, `bpe_encode` and
+    * `bpe_roundtrip` face the unrolled-SQL oracle at [[BpeMerges]]; the
+    * 256-merge queries are pinned by full driver replays in spec. */
+  private[operators] def bpeTrain(spark: SparkSession, dir: String,
+      merges: Int, k: Int, partitionsOverride: Int = 0)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val agg = t(spark, dir, "documents")
+    val words = t(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .as[(String, Long)]
-      .rdd.map { case (w, c) => (w, w, c) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .rdd.map { case (w, c) => (w, w, c) } // (word, repr, cnt)
+    val agg = graft.SharedFrames.ownedRdd(words)
+    // the sizing count doubles as the materialization job the loop needed
+    // anyway; the full-width layer is dropped once the narrow table holds
     val p = if (partitionsOverride > 0) partitionsOverride
             else bpeVocabPartitionsFor(agg.count())
-    val base = agg.coalesce(p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = graft.SharedFrames.ownedRdd(agg.coalesce(p))
     base.count()
     agg.unpersist(blocking = false)
     var cur = base
@@ -1414,21 +1319,24 @@ object CorpusOps {
     val out = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 0
     var dry = false
-    val kLocal = k
     while (rank < merges && !dry) {
       val candidates =
         (if (p == 1)
           cur.mapPartitions { it =>
             topKPairs(pairCounts(it).entrySet().iterator().asScala
-              .map(e => (e.getKey, e.getValue)), kLocal)
+              .map(e => (e.getKey, e.getValue)), k)
           }
         else
           cur.mapPartitions { it =>
             pairCounts(it).entrySet().iterator().asScala
               .map(e => (e.getKey, e.getValue))
           }.reduceByKey(_ + _, p)
-            .mapPartitions(it => topKPairs(it, kLocal))).collect()
+            .mapPartitions(it => topKPairs(it, k))).collect()
+      // the election materialized `cur` — its predecessor is now free
       if (prev != null) { prev.unpersist(blocking = false); prev = null }
+      // an empty pool means every repr is a single symbol: no pair to
+      // elect this round or ever again. The oracle agrees by construction
+      // (its empty b$r CTE contributes no merge row and a no-op replace).
       if (candidates.isEmpty) dry = true
       else {
         // driver: global rank, TRUNCATED to the top-k before the greedy
@@ -1438,12 +1346,12 @@ object CorpusOps {
         // greedy pool is never "whatever candidates happened to arrive")
         val ranked = candidates.sortWith { (x, y) =>
           x._2 > y._2 || (x._2 == y._2 && utf8Less(x._1, y._1))
-        }.take(kLocal)
+        }.take(k)
         val used = scala.collection.mutable.Set.empty[Int]
         val accepted = Seq.newBuilder[(String, Long)]
         var accN = 0
         ranked.foreach { case (pair, c) =>
-          if (accN < kLocal && rank + accN < merges) {
+          if (accN < k && rank + accN < merges) {
             val cps = pair.codePoints().toArray
             if (cps.forall(!used.contains(_))) {
               cps.foreach(used.add)
@@ -1458,17 +1366,16 @@ object CorpusOps {
           out += ((rank, pair, sym, c))
           (pair, sym)
         }
-        val next = cur.map { case (w, repr, cnt) =>
-          (w, batch.foldLeft(repr) { case (r, (pair, sym)) =>
-            r.replace(pair, sym)
-          }, cnt)
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val next = graft.SharedFrames.ownedRdd(cur.map {
+          case (w, repr, cnt) =>
+            (w, batch.foldLeft(repr) { case (r, (pair, sym)) =>
+              r.replace(pair, sym)
+            }, cnt)
+        })
         prev = cur
         cur = next
       }
     }
-    graft.SharedFrames.sharedRdd(cur)
-    if (prev != null) graft.SharedFrames.sharedRdd(prev)
     (out.result(),
       cur.map { case (w, repr, _) => (w, repr) }.toDF("word", "repr"))
   }
@@ -1495,9 +1402,9 @@ object CorpusOps {
   }
 
   /** The registered batched-training query: the merge table at
-    * [[BpeMergesLarge]] depth via [[bpeTrainBatched]]. */
+    * [[BpeMergesLarge]] depth with [[BpeBatchK]] merges per round. */
   def bpeVocabLargeBatched(spark: SparkSession, dir: String): DataFrame = {
-    val (rows, _) = bpeTrainBatched(spark, dir)
+    val (rows, _) = bpeTrain(spark, dir, BpeMergesLarge, BpeBatchK)
     import spark.implicits._
     rows.toDF("merge_rank", "pair", "merged", "pair_count")
       .orderBy(col("merge_rank"))
@@ -1516,7 +1423,7 @@ object CorpusOps {
     * table (never broadcast — real vocabs outgrow executor memory) → one
     * doc-keyed hash-aggregate with map-side partials. */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val (_, words) = bpeTrain(spark, dir)
+    val (_, words) = bpeTrain(spark, dir, BpeMerges, 1)
     encodeWithVocab(spark, dir, words)
   }
 
@@ -1538,7 +1445,8 @@ object CorpusOps {
       .orderBy(col("doc_id"))
 
   /** Tokenizer APPLICATION at PRODUCTION depth — the [[bpeEncode]] loop
-    * closed over the BATCHED 256-merge vocabulary ([[bpeTrainBatched]])
+    * closed over the BATCHED 256-merge vocabulary ([[bpeTrain]] at
+    * k = [[BpeBatchK]])
     * instead of the 10-merge sequential one: train the
     * [[BpeMergesLarge]]-deep merge table with the symbol-disjoint
     * batched election, then encode every document against the final
@@ -1551,7 +1459,7 @@ object CorpusOps {
     * CorpusOpsSpec driver replay, which recomputes every merge AND every
     * document's encoded statistics from first principles. */
   def bpeEncodeBatched(spark: SparkSession, dir: String): DataFrame = {
-    val (_, words) = bpeTrainBatched(spark, dir)
+    val (_, words) = bpeTrain(spark, dir, BpeMergesLarge, BpeBatchK)
     encodeWithVocab(spark, dir, words)
   }
 
@@ -1569,7 +1477,7 @@ object CorpusOps {
     * the vocab-sized (word, repr) table — no corpus scan at all beyond
     * training, no shuffle beyond the final scalar aggregate. */
   def bpeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val (merges, words) = bpeTrain(spark, dir)
+    val (merges, words) = bpeTrain(spark, dir, BpeMerges, 1)
     val decoded = merges.sortBy(-_._1).foldLeft(col("repr")) {
       case (c, (_, pair, sym, _)) => replace(c, lit(sym), lit(pair))
     }
@@ -1609,8 +1517,8 @@ object CorpusOps {
   }
 
   /** The shared rounds CTE chain (w0 … w[[BpeMerges]] — the same
-    * [[BpeMerges]] rounds [[bpeTrain]] runs, unrolled as static SQL: each
-    * round a pair-count CTE, a LIMIT-1 argmax CTE, and a replace
+    * [[BpeMerges]] rounds [[bpeTrain]] runs at k = 1, unrolled as static
+    * SQL: each round a pair-count CTE, a LIMIT-1 argmax CTE, and a replace
     * projection; chr(base + r) depends only on the round number, so the
     * text is data-independent. The chain carries the original word next
     * to its evolving repr — dead weight for [[bpeVocabSql]], the join key

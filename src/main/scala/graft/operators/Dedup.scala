@@ -2313,76 +2313,7 @@ object Dedup {
        |WHERE doc_id >= $ContamEvalCap
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** Near-duplicate CLUSTERS: connected components over the exact j≥0.7
-    * pair graph, labeling every clustered doc with the MIN doc_id of its
-    * component — the step a dedup pipeline actually needs after pair
-    * mining (elect one keeper per component, drop the rest; pairs alone
-    * under-delete transitive groups A~B~C where A≁C).
-    *
-    * Execution: iterative min-label propagation over the edge list —
-    * label(n) ← min(label(n), min of neighbors' labels) until fixpoint,
-    * each round one equi-join + one groupBy. Rounds = component diameter;
-    * near-dup components are short chains in practice, and the O(log n)
-    * alternating star-contraction tier ([[connectedComponents]], its own
-    * oracle-checked query `dedup_clusters_star`) covers pathological
-    * diameters at corpus scale. Plain propagation keeps THIS query the
-    * simplest auditable formulation (the DuckDB oracle walks the same
-    * graph with a recursive CTE). Rounds are [[materialize]]d — the loop
-    * is DRIVER-CONTROLLED iteration, and without cutting lineage each
-    * round's plan re-derives all prior rounds (exponential plan growth) —
-    * and each superseded round is unpersisted as soon as its successor is
-    * materialized, so block-manager storage holds at most two rounds. */
-  /** Materialize `df` into an OWNED persisted RDD with a flat logical plan
-    * — the driver-controlled-iteration primitive. Cuts lineage like
-    * `localCheckpoint` (each round's plan reads the materialized rows, not
-    * the whole history) but hands back the RDD so the loop can
-    * `unpersist` superseded rounds instead of accumulating one
-    * corpus-node-sized block set per round for the session lifetime. */
-  private[operators] def materialize(df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-  }
-
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = dedupNgramJaccard(spark, dir).select(col("d1"), col("d2"))
-    // symmetrize with ONE row-local explode, not union(pairs, reversed):
-    // the union referenced the whole pair-mining subtree in both legs,
-    // executing it twice inside this materialization (guide §2.4)
-    val (edges, edgesRdd) = materialize(pairs
-      .select(explode(array(
-          struct(col("d1"), col("d2")),
-          struct(col("d2").as("d1"), col("d1").as("d2")))).as("e"))
-      .select(col("e.d1").as("d1"), col("e.d2").as("d2")))
-    var (labels, labelsRdd) = materialize(
-      edges.select(col("d1").as("doc_id")).distinct()
-        .withColumn("cluster", col("doc_id")))
-    var changed = 1L
-    while (changed > 0) {
-      val neighborMin = edges
-        .join(labels, edges("d1") === labels("doc_id"))
-        .groupBy(col("d2").as("doc_id2"))
-        .agg(min(col("cluster")).as("ncluster"))
-      val (next, nextRdd) = materialize(labels
-        .join(neighborMin, labels("doc_id") === col("doc_id2"), "left_outer")
-        .select(col("doc_id"),
-          least(col("cluster"), coalesce(col("ncluster"), col("cluster")))
-            .as("cluster"),
-          (col("ncluster") < col("cluster")).as("shrunk")))
-      changed = next.filter(col("shrunk")).count()
-      labelsRdd.unpersist(blocking = false) // superseded round, free its blocks
-      labels = next.select(col("doc_id"), col("cluster"))
-      labelsRdd = nextRdd
-    }
-    edgesRdd.unpersist(blocking = false) // the result reads only the labels
-    // the FINAL round's blocks feed the returned frame — the harness frees
-    // them after the consuming action (ownership, not ContextCleaner)
-    graft.SharedFrames.sharedRdd(labelsRdd)
-    labels.orderBy(col("doc_id"))
-  }
-
-  /** The O(log n) TIER the propagation scaladoc cites: alternating
+  /** The repo's connected-components engine: alternating
     * large-star/small-star contraction (Kiveris et al., "Connected
     * Components in MapReduce and Beyond") over an arbitrary undirected
     * edge set `(src, dst)` → `(doc_id, cluster)` with cluster = component
@@ -2395,17 +2326,18 @@ object Dedup {
     *    to that min — stars flatten.
     *
     * Round count is O(log n) in component size (vs diameter for plain
-    * propagation — the difference between 8 rounds and 10⁶ on a pathological
-    * chain at corpus scale). Each round is two hash-aggregations + two
-    * equi-joins on the edge set; rounds are materialized via [[materialize]]
-    * and superseded rounds unpersisted immediately. Convergence = the
-    * canonical edge set reaches the composition's fixpoint, which is the
-    * per-component star (equivalence to plain propagation and the round
-    * bound are spec-pinned in PipelineOperatorsSpec; the registered
-    * `dedup_clusters_star` query runs THIS engine against the same
-    * recursive-CTE oracle as `dedup_clusters`). Node universe: endpoints
-    * of at least one NON-self-loop edge (a node appearing only as (x, x)
-    * names no pair and is dropped with the loop). */
+    * min-label propagation — the difference between 8 rounds and 10⁶ on a
+    * pathological chain at corpus scale). Each round is two
+    * hash-aggregations + two equi-joins on the edge set; rounds are
+    * lineage-cut via [[graft.SharedFrames.materialize]] and superseded
+    * rounds unpersisted immediately. Convergence = the canonical edge set
+    * reaches the composition's fixpoint, which is the per-component star
+    * (the round bound and agreement with a driver union-find are
+    * spec-pinned in PipelineOperatorsSpec; `dedup_clusters` and
+    * `dedup_clusters_star_dist` run THIS engine against the recursive-CTE
+    * oracle). Node universe: endpoints of at least one NON-self-loop edge
+    * (a node appearing only as (x, x) names no pair and is dropped with
+    * the loop). */
   def connectedComponents(edgesIn: DataFrame): DataFrame =
     connectedComponentsWithRounds(edgesIn)._1
 
@@ -2422,15 +2354,15 @@ object Dedup {
     * the registered queries stay on the same DuckDB oracle). */
   private[operators] final val CcDriverFinish = 10000L
 
-  private[operators] def connectedComponentsWithRounds(
+  private[graft] def connectedComponentsWithRounds(
       edgesIn: DataFrame,
       driverFinishAt: Long = CcDriverFinish): (DataFrame, Int) = {
     // canonical state: directed (hi > lo), self-loops dropped, distinct.
-    // The input plan (for dedupClustersStar, the whole gram self-join) is
+    // The input plan (for dedupClusters, the whole gram self-join) is
     // computed EXACTLY ONCE into this materialization; the node set for
     // the final labeling derives from it too, never from edgesIn (which
     // would re-run the expensive upstream on every downstream action).
-    val (canon0, canon0Rdd) = materialize(edgesIn
+    val (canon0, canon0Rdd) = graft.SharedFrames.materialize(edgesIn
       .select(greatest(col("src"), col("dst")).as("hi"),
         least(col("src"), col("dst")).as("lo"))
       .filter(col("hi") > col("lo")).distinct())
@@ -2462,12 +2394,12 @@ object Dedup {
         .filter(col("n") > col("m")) // the min links itself — drop self-loop
         .select(col("n").as("hi"), col("m").as("lo"))
         .distinct()
-      val (next, nextRdd) = materialize(small)
+      val (next, nextRdd) = graft.SharedFrames.materialize(small)
       val nextCount = next.count()
       // fixpoint: same count and next ⊆ cur ⇒ set equality
       done = nextCount == curCount && next.except(cur).isEmpty
       // never unpersist the INITIAL canonical set — the final labeling's
-      // node universe reads it (registered for harness release below)
+      // node universe reads it (the harness releases it)
       if (curRdd ne canon0Rdd) curRdd.unpersist(blocking = false)
       cur = next; curRdd = nextRdd; curCount = nextCount
     }
@@ -2513,24 +2445,24 @@ object Dedup {
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("cluster"), col("doc_id")).as("cluster"))
-    // canon0 (the node universe) and the final round both feed the
-    // returned labeling — harness-released after the consuming action
-    graft.SharedFrames.sharedRdd(canon0Rdd)
-    if (curRdd ne canon0Rdd) graft.SharedFrames.sharedRdd(curRdd)
     (labels, rounds)
   }
 
-  /** [[dedupClusters]]' oracle-checked twin through the O(log n) star-
-    * contraction engine — same pair graph, same recursive-CTE oracle, so a
-    * green row proves the contraction computes exactly the transitive
-    * closure the propagation loop does. */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
+  /** Near-duplicate CLUSTERS: connected components over the exact j≥0.7
+    * pair graph, labeling every clustered doc with the MIN doc_id of its
+    * component — the step a dedup pipeline actually needs after pair
+    * mining (elect one keeper per component, drop the rest; pairs alone
+    * under-delete transitive groups A~B~C where A≁C). Runs the
+    * [[connectedComponents]] engine; registered as both `dedup_clusters`
+    * and `dedup_clusters_star`, each against the recursive-CTE oracle
+    * [[dedupClustersSql]]. */
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = dedupNgramJaccard(spark, dir)
       .select(col("d1").as("src"), col("d2").as("dst"))
     connectedComponents(pairs).orderBy(col("doc_id"))
   }
 
-  /** [[dedupClustersStar]] with the driver-finish hybrid DISABLED
+  /** [[dedupClusters]] with the driver-finish hybrid DISABLED
     * (driverFinishAt = 0): every contraction round runs distributed to
     * the fixpoint. At test scale the hybrid's cutoff short-circuits the
     * whole graph to the driver union-find, so without this registration
@@ -3013,7 +2945,7 @@ object Dedup {
     var keepLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def keep(df: DataFrame): Int = {
       val t0 = System.nanoTime()
-      val rdd = df.rdd.persist(keepLevel)
+      val rdd = graft.SharedFrames.ownedRdd(df.rdd, keepLevel)
       if (sys.env.contains("SPARK_GRAFT_SFX_DEBUG")) {
         val n = rdd.count()
         System.err.println(f"[sfx] keep#${store.length} rows=$n ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -3116,10 +3048,11 @@ object Dedup {
           else pairBucket(col("_t0"), greatest(col("_t1"), lit(0L))))
     }
     /** One prefix-doubling round. The rank is NOT dense — each tuple
-      * class gets the global row_number of its FIRST row (bucket COUNT
-      * offsets + a running max of within-bucket class-start row numbers,
-      * all sharing the one bucket-sort window) — but it is exactly what
-      * every consumer needs: equal tuples share a rank and ranks are
+      * class gets the global row number of its FIRST row: its bucket's
+      * COUNT offset plus `rank()` over the one bucket-sort window (every
+      * `_t*` slot is coalesced non-null above, so rank's peer test is
+      * exactly tuple equality) — but it is exactly what every consumer
+      * needs: equal tuples share a rank and ranks are
       * order-isomorphic to the tuple order (the next round's tuple and
       * bucket read only order and equality, the SA sort is the same
       * permutation, the descend probes equality). Dropping the dense
@@ -3129,8 +3062,8 @@ object Dedup {
       * task (guide §2.3: shuffle metadata, not payloads). Ranks stay in
       * [1, nt] (row numbers ≤ token count), so pairBucket's scaling and
       * the −1 past-end sentinel hold unchanged; the r15 bucket-overflow
-      * bound (rows per bucket < 2^31) is the SA keep's own row_number
-      * bound. The ORACLE still dense_ranks — equality across the two
+      * bound (rows per bucket < 2^31) covers `rank()`'s int as well as
+      * the SA keep's own row_number. The ORACLE still dense_ranks — equality across the two
       * rank constructions certifies order-isomorphism, not a replay. */
     def roundFrame(prev: DataFrame, k: Int): DataFrame = {
       val paired = pairedFrame(prev, k)
@@ -3139,12 +3072,8 @@ object Dedup {
         B - 1)
         .select(col("bucket").as("_skb"), col("offset").as("_sko"))
       val w = Window.partitionBy(col("_skb")).orderBy(tupleCols: _*)
-      val tup = struct(tupleCols: _*)
       paired
-        .withColumn("_skrn", row_number().over(w).cast("long"))
-        .withColumn("_skcs", max(when(
-            coalesce(lag(tup, 1).over(w) =!= tup, lit(true)), col("_skrn")))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("_skcs", rank().over(w).cast("long"))
         .join(broadcast(offsets), Seq("_skb"))
         .select(col("doc_id"), col("idx"),
           (col("_sko") + col("_skcs")).as("r"), col("f4"))
@@ -3289,11 +3218,9 @@ object Dedup {
     // free every intermediate: only the span-sized result stays cached —
     // leaving the corpus-sized level RDDs persisted degraded EVERY
     // later query in the same session (measured 1.07× on the full bench)
+    // (the span-sized result outlives this method; the harness releases
+    // it after the consumer's terminal action)
     store.indices.dropRight(1).foreach(i => store(i)._1.unpersist(false))
-    // the span-sized result RDD outlives this method (the consumer's
-    // terminal action reads it) — register for harness-owned release so
-    // repeated invocations don't accumulate even result-sized residue
-    graft.SharedFrames.sharedRdd(store(spansI)._1)
     at(spansI).orderBy(col("doc_id"), col("span_start"))
   }
 

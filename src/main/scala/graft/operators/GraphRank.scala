@@ -184,20 +184,17 @@ object GraphRank {
     val edges = graft.SharedFrames.shared(simEdges(spark, dir))
     // dist 0, root = self: enc = 0·2^32 + v. Each round references
     // `reach` twice (carry ∪ relax) — rounds are lineage-cut via
-    // [[Dedup.materialize]] (the [[graphKcore]] discipline): the
-    // unbroken plan embeds the previous round twice, doubling per round.
-    var (reach, r0Rdd) = Dedup.materialize(
+    // [[graft.SharedFrames.materialize]] (the [[graphKcore]] discipline):
+    // the unbroken plan embeds the previous round twice, doubling per round.
+    var reach = graft.SharedFrames.materialize(
       nodes.filter(col("v") % BfsSeedMod === 0L)
-        .select(col("v"), col("v").as("enc")))
-    graft.SharedFrames.sharedRdd(r0Rdd)
+        .select(col("v"), col("v").as("enc")))._1
     (1 to BfsIters).foreach { _ =>
       val cand = edges
         .join(reach.withColumnRenamed("v", "src"), Seq("src"))
         .select(col("dst").as("v"), (col("enc") + BfsEncBase).as("enc"))
-      val (next, rdd) = Dedup.materialize(
-        reach.union(cand).groupBy(col("v")).agg(min(col("enc")).as("enc")))
-      graft.SharedFrames.sharedRdd(rdd)
-      reach = next
+      reach = graft.SharedFrames.materialize(
+        reach.union(cand).groupBy(col("v")).agg(min(col("enc")).as("enc")))._1
     }
     nodes.join(reach, Seq("v"), "left_outer")
       .select(col("v").as("doc_id"),
@@ -347,24 +344,22 @@ object GraphRank {
     * SF, so the fixed-round answer IS the fixpoint). Each round: filter
     * live edges by survivor membership on both endpoints (two co-keyed
     * joins), one partial-combinable degree count, one filter — the CC
-    * loop's shape, rounds lineage-cut via [[Dedup.materialize]] since
-    * the survivor set is referenced twice per round. */
+    * loop's shape, rounds lineage-cut via
+    * [[graft.SharedFrames.materialize]] since the survivor set is
+    * referenced twice per round. */
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
     val nodes = t(spark, dir, "documents")
       .filter(col("doc_id") < PrCap).select(col("doc_id").as("v"))
     val sym = graft.SharedFrames.shared(simEdges(spark, dir))
-    var (surv, rdd0) = Dedup.materialize(
-      sym.select(col("src").as("v")).distinct())
-    graft.SharedFrames.sharedRdd(rdd0)
+    var surv = graft.SharedFrames.materialize(
+      sym.select(col("src").as("v")).distinct())._1
     (1 to KCoreIters).foreach { _ =>
       val alive = sym
         .join(surv.withColumnRenamed("v", "src"), Seq("src"))
         .join(surv.withColumnRenamed("v", "dst"), Seq("dst"))
-      val (next, rdd) = Dedup.materialize(
+      surv = graft.SharedFrames.materialize(
         alive.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= KCoreK).select(col("src").as("v")))
-      graft.SharedFrames.sharedRdd(rdd)
-      surv = next
+          .filter(col("deg") >= KCoreK).select(col("src").as("v")))._1
     }
     val coreDeg = sym
       .join(surv.withColumnRenamed("v", "src"), Seq("src"))

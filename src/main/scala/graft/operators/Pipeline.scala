@@ -24,9 +24,9 @@ import graft.Tables.t
   * composed DuckDB oracle — a green row proves the stages agree end to
   * end, including the interaction the standalone gates cannot see (shard
   * boundaries depend on exactly which docs survive the earlier stages).
-  * The near-dup stage runs the O(log n) star-contraction engine; its
-  * equivalence to plain propagation is itself oracle-pinned
-  * (`dedup_clusters` vs `dedup_clusters_star`).
+  * The near-dup stage is [[Dedup.dedupClusters]], the O(log n)
+  * star-contraction engine that `dedup_clusters` gates against the
+  * recursive-CTE reachability oracle.
   *
   * Scale shape: semi/anti joins on doc_id (broadcastable survivor id
   * sets; at full scale AQE picks the join side), then the two-phase
@@ -46,7 +46,7 @@ object Pipeline {
     // near-dup (mining over survivors only would resurface it — and is
     // measured VACUOUS on this corpus: zero j≥0.7 pairs survive cleaning
     // at sf0.01/0.1, so the stage would silently do nothing).
-    val nonKeepers = Dedup.dedupClustersStar(spark, dir)
+    val nonKeepers = Dedup.dedupClusters(spark, dir)
       .filter(col("doc_id") =!= col("cluster")).select("doc_id")
     // materialize the (doc_id, text) rows that survived cleaning + keeper
     // election ONCE — decontamination and packing both read these rows
@@ -109,7 +109,7 @@ object Pipeline {
     val cleanedIds = graft.SharedFrames.shared(
       TextAnalysis.corpusClean(spark, dir).select("doc_id"))
     val nonKeepers = graft.SharedFrames.shared(
-      Dedup.dedupClustersStar(spark, dir)
+      Dedup.dedupClusters(spark, dir)
         .filter(col("doc_id") =!= col("cluster")).select("doc_id"))
     val survivors = graft.SharedFrames.shared(
       t(spark, dir, "documents")
@@ -198,10 +198,11 @@ object Pipeline {
     * documents can never straddle a split boundary (the classic
     * train→test leak that inflates benchmark scores; Lee et al. 2021
     * §6). Cluster labels come from the oracle-pinned
-    * [[Dedup.dedupClusters]] connected components over the j ≥ 0.7 pair
-    * graph; docs outside the similarity graph are their own singleton
-    * cluster. The assignment is the deterministic MINSTD residue of the
-    * cluster label — reproducible across runs and engines, no RNG state.
+    * [[Dedup.dedupClusters]] star-contraction components over the
+    * j ≥ 0.7 pair graph; docs outside the similarity graph are their own
+    * singleton cluster. The assignment is the deterministic MINSTD
+    * residue of the cluster label — reproducible across runs and engines,
+    * no RNG state.
     *
     * Scale shape: one left join of the doc spine against the (graph-node
     * sized, far sub-corpus) cluster table, then a pure map — the split

@@ -2748,13 +2748,14 @@ object Similarity {
        |FROM r WHERE rnk <= $KnnK
        |ORDER BY src, rnk""".stripMargin)
 
-  /** Hash-to-min rounds for [[knnComponents]] — each round takes the
-    * min over self, in-neighbors, and the label's own label (pointer
-    * jump), so the minimum component id spreads along paths AND through
-    * label indirection: convergence in O(log diameter) rounds, pinned
-    * converged at every test SF by KnnComponentsSpec (6 was one round
-    * short of the fixpoint at sf0.01 — two leaf nodes still carried a
-    * stale indirection). */
+  /** Hash-to-min rounds the [[knnComponentsSql]] oracle unrolls — each
+    * round takes the min over self, in-neighbors, and the label's own
+    * label (pointer jump), so the minimum component id spreads along
+    * paths AND through label indirection: convergence in O(log diameter)
+    * rounds (6 was one round short of the fixpoint at sf0.01 — two leaf
+    * nodes still carried a stale indirection). The engine does not run
+    * these rounds: an unconverged oracle would disagree with its true
+    * components, so the DuckDB gate fails if the count stops sufficing. */
   final val KnnCcIters = 8
 
   /** CONNECTED COMPONENTS of the full-corpus kNN graph — the graph
@@ -2762,42 +2763,20 @@ object Similarity {
     * simulates, now running on the whole corpus (VERDICT r17 item 4):
     * cluster membership for every vector, the capability a 100 TB
     * dedup-clustering user actually wants (near-dup cluster triage,
-    * leak-free split keys, per-cluster sampling).
+    * leak-free split keys, per-cluster sampling). The component id is the
+    * min vec_id of the component — stable under corpus growth.
     *
-    * Edges are [[knnGraphIvf]]'s linear-sized output (≤ k per node),
-    * symmetrized; labels converge by HASH-TO-MIN (Rastogi et al. 2013):
-    * each synchronous round sets
-    * `lab(v) ← min(lab(v), min over neighbors' labs, lab(lab(v)))`
-    * — the pointer-jump term halves label-chain depth per round, so
-    * [[KnnCcIters]] rounds converge for diameters the plain
-    * min-propagation would need 2^[[KnnCcIters]] rounds to cover.
-    * Deterministic: pure integer mins, engine-neutral, no tie rules.
-    *
-    * 100 TB shape: every round is one edges⋈labels equi-join + one
-    * partial-combinable per-node min + one labels⋈labels equi-join —
-    * all linear in n (edges ≤ 2kn); per-round frames are LINEAGE-CUT
-    * ([[Dedup.materialize]]'s RDD cut, superseded rounds unpersisted
-    * inline) because each round references the previous labels THREE
-    * times (self, neighbor-min, jump) — with plain persistence the
-    * logical plan triples per round, the documented exponential-lineage
-    * trap (measured: heap exhaustion at 6 rounds on a 500-node corpus).
-    * The component id is the min vec_id of the component — stable under
-    * corpus growth. */
+    * Execution: [[knnGraphIvf]]'s linear-sized DIRECTED edges (≤ k per
+    * node) feed the house star-contraction engine
+    * ([[Dedup.connectedComponents]] — O(log n) alternating
+    * large/small-star rounds with the ≤[[Dedup.CcDriverFinish]]-row
+    * driver union-find finish), whose own (hi, lo) canonicalization
+    * subsumes a symmetrize + distinct shuffle; vectors outside every edge
+    * label themselves. Only the oracle unrolls [[KnnCcIters]] hash-to-min
+    * rounds (Rastogi et al. 2013); both compute the true components,
+    * which KnnComponentsSpec pins against a driver union-find over the
+    * identical edge set at every SF. */
   def knnComponents(spark: SparkSession, dir: String): DataFrame = {
-    // r18 optimization: run the house O(log n) star-contraction engine
-    // ([[Dedup.connectedComponents]] — alternating large/small-star with
-    // the ≤[[Dedup.CcDriverFinish]]-row driver union-find finish) instead
-    // of [[KnnCcIters]] fixed hash-to-min rounds: the converged labels
-    // are the SAME true components (component id = min vec_id), which is
-    // all the registered output contains — the dedup_clusters vs
-    // dedup_clusters_star precedent, where two engines share one oracle.
-    // KnnComponentsSpec pins labels ≡ a driver union-find independent of
-    // engine, and [[knnComponentsIters]] keeps the hash-to-min reference
-    // the convergence pin compares against. Wins: no per-round
-    // materialization chain (8 rounds → O(log n) with an early driver
-    // finish), and the raw DIRECTED kNN edges feed the engine directly —
-    // its own (hi, lo) canonicalization subsumes the symmetrize +
-    // distinct shuffle (measured 4.0 s → ~1.7 s at sf0.1).
     val knn = knnGraphIvf(spark, dir)
       .select(col("src"), col("nbr").as("dst"))
     val cc = Dedup.connectedComponents(knn)
@@ -2807,40 +2786,6 @@ object Similarity {
       nodes.join(cc.select(col("doc_id").as("v"), col("cluster").as("lab")),
           Seq("v"), "left_outer")
         .select(col("v"), coalesce(col("lab"), col("v")).as("lab")))
-    val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("csize"))
-    labels.join(sizes, Seq("lab"))
-      .select(col("v").as("vec_id"), col("lab").as("component"),
-        col("csize"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** [[knnComponents]] with an explicit round count — the spec pins
-    * convergence by comparing iters vs iters+1. */
-  private[operators] def knnComponentsIters(spark: SparkSession,
-      dir: String, iters: Int): DataFrame = {
-    val knn = knnGraphIvf(spark, dir).select(col("src"), col("nbr"))
-    val sym = graft.SharedFrames.shared(symEdges(knn))
-    val nodes = withNorm(spark, dir).filter(col("nrm") > 0)
-      .select(col("vec_id").as("v"))
-    var (labels, labelsRdd) =
-      Dedup.materialize(nodes.select(col("v"), col("v").as("lab")))
-    (1 to iters).foreach { _ =>
-      val nb = sym
-        .join(labels.select(col("v").as("src"), col("lab").as("slab")),
-          Seq("src"))
-        .groupBy(col("nbr")).agg(min(col("slab")).as("m"))
-      val jump = labels.select(col("v").as("jv"), col("lab").as("jlab"))
-      val (next, nextRdd) = Dedup.materialize(
-        labels.join(nb, labels("v") === nb("nbr"), "left_outer")
-          .join(jump, labels("lab") === jump("jv"))
-          .select(labels("v"),
-            least(labels("lab"), coalesce(col("m"), labels("lab")),
-              col("jlab")).as("lab")))
-      labelsRdd.unpersist(blocking = false)
-      labels = next
-      labelsRdd = nextRdd
-    }
-    graft.SharedFrames.sharedRdd(labelsRdd)
     val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("csize"))
     labels.join(sizes, Seq("lab"))
       .select(col("v").as("vec_id"), col("lab").as("component"),

@@ -25,10 +25,10 @@ object TimeQueries {
     catch { case _: Throwable => () }
     for (n <- names; pass <- 1 to 3) {
       // the timed window MUST include DataFrame construction: iterative
-      // queries (dedup_clusters, bpe_vocab, pipeline_e2e) run their
-      // driver-controlled rounds — real Spark jobs — while BUILDING the
-      // frame, and excluding construction under-reported them 4-6× versus
-      // Bench (which is the contract measurement and was right)
+      // queries (connected components, BPE training, pipeline_e2e) run
+      // their driver-controlled rounds — real Spark jobs — while BUILDING
+      // the frame, and excluding construction under-reported them 4-6×
+      // versus Bench (which is the contract measurement and was right)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(n)(spark, dir)
       val t1 = System.nanoTime()

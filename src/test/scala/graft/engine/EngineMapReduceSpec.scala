@@ -207,6 +207,25 @@ class EngineMapReduceSpec extends AnyFunSuite with SparkSpec {
         "DIFF\tYW5u\tcDE=\t#\n")
   }
 
+  test("tree path combines a partition's outputs in O(n log n) bytes, not O(n²)") {
+    import spark.implicits._
+    val n = 2000
+    val kv = (0 until n).map(i => KV(f"k$i%05d", Array.emptyByteArray))
+      .toDS().coalesce(1)
+    assert(kv.rdd.getNumPartitions == 1)
+    CombineBytesFn.bytes.set(0L)
+    val r = MapReduce.runTree(kv, CombineBytesFn)
+    assert(r.succeeded && r.dataUtf8.split("\n").length == n)
+    // a balanced tree passes each output through ~log2(n) combines; a
+    // one-row-at-a-time fold re-passes the growing accumulator every row
+    // (~total·n/2 bytes, about 14M here)
+    val total = r.data.length.toLong
+    val bound = 2L * total * (32 - Integer.numberOfLeadingZeros(n))
+    assert(CombineBytesFn.bytes.get() <= bound,
+      s"combine saw ${CombineBytesFn.bytes.get()} bytes for a $total-byte " +
+        s"result over $n rows (bound $bound)")
+  }
+
   test("engine routes associative fns to the tree tier (combines run on executor task threads)") {
     // the collect-then-fold formulation combines ONLY on the driver thread;
     // the tree tier partial-aggregates per partition, so in local mode the
@@ -234,6 +253,19 @@ object ThreadRecordingAssocFn extends AssociativeMapReduceFn {
   def zero: Array[Byte] = Array.emptyByteArray
   def combine(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     threads.add(Thread.currentThread().getName)
+    if (a.isEmpty) b else if (b.isEmpty) a
+    else (new String(a, "UTF-8") + "\n" + new String(b, "UTF-8")).getBytes("UTF-8")
+  }
+}
+
+/** Concatenating associative fn that counts the bytes handed to every
+  * combine (top-level object: local-mode tasks share the JVM's instance). */
+object CombineBytesFn extends AssociativeMapReduceFn {
+  val bytes = new java.util.concurrent.atomic.AtomicLong()
+  def map(key: String, value: Array[Byte]): Array[Byte] = key.getBytes("UTF-8")
+  def zero: Array[Byte] = Array.emptyByteArray
+  def combine(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    bytes.addAndGet(a.length.toLong + b.length)
     if (a.isEmpty) b else if (b.isEmpty) a
     else (new String(a, "UTF-8") + "\n" + new String(b, "UTF-8")).getBytes("UTF-8")
   }

@@ -307,7 +307,8 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
       s"$rounds rounds for ${rows.length} merges — batching is not batching")
     // truncate-to-top-k makes the result a pure function of the counts:
     // a forced multi-partition run must agree merge-for-merge
-    val (multi, _) = CorpusOps.bpeTrainBatched(spark, dir, partitionsOverride = 4)
+    val (multi, _) = CorpusOps.bpeTrain(spark, dir, CorpusOps.BpeMergesLarge,
+      k, partitionsOverride = 4)
     graft.SharedFrames.releaseAll()
     assert(multi == rows.toSeq,
       "batched elections diverged across partitionings")
@@ -364,10 +365,10 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     // corpus: identical merge tables prove the distributed election
     // (partial maps → combined shuffle → partition argmax → driver final)
     // implements exactly the single-task rule, ties included
-    val (m1, _) = CorpusOps.bpeTrain(spark, dir, rounds = 40,
+    val (m1, _) = CorpusOps.bpeTrain(spark, dir, merges = 40, k = 1,
       partitionsOverride = 1)
     graft.SharedFrames.releaseAll()
-    val (m4, _) = CorpusOps.bpeTrain(spark, dir, rounds = 40,
+    val (m4, _) = CorpusOps.bpeTrain(spark, dir, merges = 40, k = 1,
       partitionsOverride = 4)
     graft.SharedFrames.releaseAll()
     assert(m1.length >= 32, s"only ${m1.length} merges — vacuous corpus")

@@ -5,32 +5,25 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Pins for the full-corpus components face (VERDICT r17 item 4): the
-  * hash-to-min rounds must have CONVERGED by [[Similarity.KnnCcIters]]
-  * (one more round changes nothing — the DuckDB gate proves
-  * Spark ≡ oracle at the same round count, only this pin proves the
-  * round count suffices), and the converged labels must equal TRUE
-  * connected components from a driver union-find over the identical
-  * edge set (the kNN face itself is oracle-exact + spec-pinned, so
-  * collecting its output as the replay's edges is sound). */
+  * engine's labels must equal TRUE connected components from a driver
+  * union-find over the identical edge set (the kNN face itself is
+  * oracle-exact + spec-pinned, so collecting its output as the replay's
+  * edges is sound), and csize must be the true component population.
+  * The DuckDB gate compares the engine with [[Similarity.KnnCcIters]]
+  * unrolled hash-to-min rounds: if that gate fails while this pin holds,
+  * the oracle's round count has stopped sufficing, not the engine. */
 class KnnComponentsSpec extends AnyFunSuite with SparkSpec {
   val dir = "/root/testdata/sf0.001"
 
-  test("hash-to-min converged by KnnCcIters; labels ≡ driver union-find; csize consistent") {
-    val got = Similarity.knnComponents(spark, dir).collect()
+  /** Runs `knn_components` on `d` and checks every label and csize
+    * against a driver union-find over the same kNN edges; returns the
+    * node count and each component's population. */
+  private def assertUnionFind(d: String): (Int, Map[Long, Int]) = {
+    val got = Similarity.knnComponents(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     graft.SharedFrames.releaseAll()
-    assert(got.nonEmpty)
-
-    // ---- convergence: one more round is a fixpoint ----
-    val more = Similarity
-      .knnComponentsIters(spark, dir, Similarity.KnnCcIters + 1).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.SharedFrames.releaseAll()
-    assert(got.toSeq == more.toSeq,
-      s"${Similarity.KnnCcIters} rounds have not converged on this corpus")
-
-    // ---- driver union-find over the same (oracle-exact) edge set ----
-    val edges = Similarity.knnGraphIvf(spark, dir)
+    assert(got.nonEmpty, s"no components at $d")
+    val edges = Similarity.knnGraphIvf(spark, d)
       .select(col("src"), col("nbr")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     graft.SharedFrames.releaseAll()
@@ -43,39 +36,33 @@ class KnnComponentsSpec extends AnyFunSuite with SparkSpec {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    got.foreach { case (v, _, _) => parent.getOrElse(v, v) } // nodes exist
     edges.foreach { case (a, b) => union(a, b) }
     // component id contract: the min vec_id of the component — which is
     // exactly the union-find root when unions always point max → min
     val expected = got.map(_._1).map(v => v -> find(v)).toMap
     got.foreach { case (v, comp, _) =>
       assert(comp == expected(v),
-        s"node $v: component $comp != union-find ${expected(v)}")
+        s"$d node $v: component $comp != union-find ${expected(v)}")
     }
-
-    // ---- csize is the true component population ----
+    // csize is the true component population
     val pops = expected.values.groupBy(identity).view.mapValues(_.size).toMap
     got.foreach { case (v, comp, csize) =>
       assert(csize == pops(comp).toLong,
-        s"node $v: csize $csize != population ${pops(comp)} of $comp")
+        s"$d node $v: csize $csize != population ${pops(comp)} of $comp")
     }
-    val nComp = pops.size
-    val maxC = pops.values.max
-    info(s"${got.length} nodes, $nComp components, largest $maxC")
+    (got.length, pops)
   }
 
-  test("convergence holds at the larger SFs too") {
-    // the DuckDB gate proves Spark ≡ oracle at the same round count at
-    // every SF; this pins that the count SUFFICES there (the kcore
-    // convergence-pin precedent) — diameters grow with the corpus
+  test("labels ≡ driver union-find; csize consistent") {
+    val (n, pops) = assertUnionFind(dir)
+    info(s"$n nodes, ${pops.size} components, largest ${pops.values.max}")
+  }
+
+  test("labels ≡ driver union-find at sf0.01 and sf0.1") {
+    // diameters grow with the corpus; the oracle's fixed hash-to-min
+    // round count is only as good as this agreement at every SF
     for (d <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
-      val a = Similarity.knnComponents(spark, d).collect().toSeq
-      graft.SharedFrames.releaseAll()
-      val b = Similarity
-        .knnComponentsIters(spark, d, Similarity.KnnCcIters + 1)
-        .collect().toSeq
-      graft.SharedFrames.releaseAll()
-      assert(a == b, s"${Similarity.KnnCcIters} rounds not converged at $d")
+      assertUnionFind(d)
     }
   }
 }

@@ -229,15 +229,11 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
       "incremental dedup dropped nothing — vacuous signature")
   }
 
-  test("star contraction ≡ plain propagation on the corpus graph; O(log n) rounds on an adversarial chain") {
+  test("star contraction: log rounds; hybrid ≡ pure ≡ union-find") {
     import spark.implicits._
-    // 1. equivalence on the real near-dup pair graph
-    val plain = Dedup.dedupClusters(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.dedupClustersStar(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == plain, "star contraction labels diverge from propagation")
-    // 2. adversarial chain 0-1-2-…-255: plain propagation needs ~diameter
+    // (the corpus pair graph is pinned against a driver union-find by
+    // "dedup_clusters: components are transitively closed")
+    // 1. adversarial chain 0-1-2-…-255: plain propagation needs ~diameter
     //    (255) rounds; the alternating contraction must stay logarithmic.
     //    Kiveris et al. bound the alternation by O(log n) star rounds —
     //    pin 3·log₂(256) + 2 = 26 as a generous ceiling (measured: ≤ 8).
@@ -251,7 +247,7 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
       s"chain not fully contracted to root 0: ${got.filter(_._2 != 0L).take(5).toSeq}")
     assert(rounds > 0 && rounds <= 26,
       s"contraction took $rounds rounds on a 256-chain")
-    // 2b. the hybrid (driver union-find once the remnant fits) computes
+    // 1b. the hybrid (driver union-find once the remnant fits) computes
     //     EXACTLY the pure-distributed labels — on the chain, where the
     //     default cutoff collects immediately, and mid-contraction at a
     //     cutoff that forces one distributed round first
@@ -261,7 +257,7 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
       assert(hybrid == got.toMap,
         s"hybrid (cutoff $cutoff) diverges from pure-distributed labels")
     }
-    // 3. random-graph property: labels match a driver union-find
+    // 2. random-graph property: labels match a driver union-find
     val rnd = new scala.util.Random(42)
     val redges = (0 until 300).map(_ => (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter(e => e._1 != e._2)
@@ -329,7 +325,7 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
     // election, and escaped flagging
     assert(survivorIds.subsetOf(cleaned), "packed doc not in cleaned set")
     assert(survivorIds.intersect(flagged).isEmpty, "packed doc is flagged")
-    val nonKeepers = Dedup.dedupClustersStar(spark, dir).collect()
+    val nonKeepers = Dedup.dedupClusters(spark, dir).collect()
       .collect { case r if r.getLong(0) != r.getLong(1) => r.getLong(0) }.toSet
     assert(survivorIds.intersect(nonKeepers).isEmpty,
       "packed doc is a non-keeper near-duplicate")
@@ -346,7 +342,7 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
     val sf01 = "/root/testdata/sf0.01"
     val survivorIds = Pipeline.pipelineE2e(spark, sf01).collect()
       .map(_.getLong(0)).toSet
-    val nonKeepers = Dedup.dedupClustersStar(spark, sf01).collect()
+    val nonKeepers = Dedup.dedupClusters(spark, sf01).collect()
       .collect { case r if r.getLong(0) != r.getLong(1) => r.getLong(0) }.toSet
     val flagged = Dedup.decontaminate(spark, sf01).collect()
       .map(_.getLong(0)).toSet

@@ -14,16 +14,17 @@ import graft.{SharedFrames, SparkEntry, SparkSpec}
   * ContextCleaner on driver GC" — which is exactly the dependence the r5
   * bench stall implicated (a ~50 GiB driver heap collects weak refs
   * rarely, so nothing contractually drained the blocks). The contract is
-  * now OWNERSHIP: every shared intermediate and every loop's final
-  * generation registers with [[graft.SharedFrames]], the harness calls
-  * `releaseAll()` after each query's terminal action, and release is
-  * SYNCHRONOUS in the registry (`getPersistentRDDs` reflects it without
-  * any GC). What this spec pins:
+  * now OWNERSHIP: every shared intermediate and every loop round
+  * registers with [[graft.SharedFrames]] when it is persisted, before any
+  * action on it; the harness calls `releaseAll()` after each query's
+  * terminal action; and release is SYNCHRONOUS in the registry
+  * (`getPersistentRDDs` reflects it without any GC). What this spec pins:
   *
   *  1. DURING a run, residency stays bounded by one generation — the
   *     iterative operators unpersist superseded rounds inline;
   *  2. AFTER `releaseAll()`, residency returns to exactly the baseline —
-  *     zero residue, deterministically, no `System.gc()` anywhere. */
+  *     zero residue, deterministically, no `System.gc()` anywhere;
+  *  3. the same holds when a loop's action throws mid-query. */
 class BenchHygieneSpec extends AnyFunSuite with SparkSpec {
   val dir = "/root/testdata/sf0.001"
 
@@ -88,4 +89,33 @@ class BenchHygieneSpec extends AnyFunSuite with SparkSpec {
         s"$name accumulates residue across run/release cycles: " +
           s"ids ${after3.toSeq.sorted}")
     }
+
+  test("connected components: a failing round leaves ZERO residue after release") {
+    import org.apache.spark.sql.functions.{col, udf}
+    SharedFrames.releaseAll()
+    val base = persistedIds
+    val boom = udf { (x: Long) =>
+      if (x >= 0L) throw new IllegalStateException("edge UDF failure")
+      x
+    }.asNondeterministic()
+    // a range, not a local Seq: the optimizer folds projections over local
+    // rows while planning, which would throw before anything persists
+    val edges = spark.range(1, 4)
+      .select(boom(col("id")).as("src"), (col("id") + 1).as("dst"))
+    // AQE off for this run: with it on, building the canonical set's RDD
+    // already runs the edge shuffle and the UDF throws before anything
+    // persists; off, it throws inside the count, as a cancelled or failed
+    // round job does
+    val aqe = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try intercept[Exception] {
+      graft.operators.Dedup.connectedComponentsWithRounds(edges)
+    } finally prior.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    SharedFrames.releaseAll()
+    val after = settledExtra(base)
+    assert(after.isEmpty,
+      s"a failed components run left persisted RDDs ${after.toSeq.sorted} " +
+        "that releaseAll could not reach")
+  }
 }
